@@ -1,5 +1,13 @@
-"""Filesystem commit primitives shared by the table / rollup publish
-protocols (table.KeyedTable._publish_snapshot, streaming.rollup).
+"""Filesystem commit primitives behind every versioned log of the engine.
+
+``CommitTimeline`` is the one place that knows commit naming, seq
+allocation, publishing and retention. Five logs run on it — the schema
+sidecar (``{table}__schema/v…``), the writer lease (``{table}__writer/e…``),
+COW snapshots (``{table}__snapshots/s…``), MOR base versions
+(``{table}/base__commits/v…_t…``) and rollup commits
+(``{rollup}__commits/c…``) — and each caller keeps only its policy: what
+goes into a stage, when to retry, which seqs to keep. The stage-and-swap
+table publish (``swap_table_dir``) is the one commit outside a timeline.
 
 Every publish is a named-commit CAS — "make this staged directory the
 content of commit NAME, iff NAME is unclaimed" — behind a pluggable
@@ -29,13 +37,11 @@ not. The claim carries its CONTENT in the same atomic operation — on a
 conditional-create store the object materializes fully written at
 ``close()`` (one conditional PUT), and on the local filesystem the
 pointer is hard-linked into place already filled (link(2) fails EEXIST
-atomically) — so there is NO visible-but-unresolved window: an
-incremental publisher that merges from the newest resolved commit can
-never observe a claimed-newer-but-empty tip from a LIVE writer and
-build past it (that was a silent lost update; see pointer_commit).
-Readers still treat an empty/unreadable pointer as burned — legacy
-claims from the old two-step protocol, or external tools, stay
-skipped-for-reads / counted-for-allocation. Stores that can neither
+atomically) — so there is NO visible-but-unresolved window from a LIVE
+writer. Readers still treat an empty/unreadable pointer as burned —
+legacy claims from the old two-step protocol, or external tools, stay
+skipped-for-reads / counted-for-allocation, and incremental publishers
+wait them out (``CommitTimeline.settle``). Stores that can neither
 hard-link nor conditionally create REFUSE the pointer protocol loudly
 (``_require_conditional_create``) instead of silently degrading the
 CAS to exists-check + PUT, where two writers can both "win" a name.
@@ -46,7 +52,13 @@ object-store URI schemes get pointer, everything else rename."""
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import string
+import time
+import uuid
+from contextlib import contextmanager
 
 #: URI schemes whose directory rename is copy+delete (non-atomic): the
 #: rename-CAS can tear there, so commits go through the pointer protocol.
@@ -88,9 +100,10 @@ def rename_commit(
     round-12 gate run of the threaded rollup hunt: when a lost CAS
     degrades to LocalFileSystem's non-atomic copy-INTO (our stage becomes
     ``target/<uuid>/``), a CONCURRENT scanner's crash-garbage heal
-    (rollup._scan / KeyedTable.snapshots delete directory members of
-    published commits) can remove that nested copy between our rename
-    returning and our nested-exists probe — the loser then saw a clean
+    (IncrementalRollup._provenance / KeyedTable.snapshots delete
+    directory members of published commits) can remove that nested copy
+    between our rename returning and our nested-exists probe — the loser
+    then saw a clean
     target, reported True, and its batch was durably gone while the
     (run, batch) marker it thought it published was deleted with the
     nested dir. The witness is writer-unique (stage names are uuids), so
@@ -285,10 +298,8 @@ def pointer_commit(fs, hpath, stage: str, target: str) -> bool:
     # which is an atomic namenode op on HDFS-semantics stores.
     local = _local_os_path(ptr) if _fs_is_local(fs) else None
     if local is not None:
-        import uuid as _uuid
-
         os.makedirs(os.path.dirname(local), exist_ok=True)
-        tmp = f"{local}.fill{_uuid.uuid4().hex}.tmp"
+        tmp = f"{local}.fill{uuid.uuid4().hex}.tmp"
         try:
             with open(tmp, "wb") as fh:
                 fh.write(data)
@@ -372,8 +383,6 @@ def claim_is_stalled(
     observation memory (ptr_path → (signature, first-seen-at)); a missing
     pointer file (hole from retention, or rename-protocol name) yields a
     None signature and ages like any other quiescent claim."""
-    import time as _time
-
     if budget_sec is None:
         budget_sec = claim_stall_budget()
     try:
@@ -381,7 +390,7 @@ def claim_is_stalled(
         sig: object = (st.getModificationTime(), st.getLen())
     except Exception:
         sig = None
-    now = _time.monotonic()
+    now = time.monotonic()
     prev = seen.get(ptr_path)
     if prev is None or prev[0] != sig:
         seen[ptr_path] = (sig, now)
@@ -460,6 +469,186 @@ def heal_nested_dirs(fs, hpath, commit_uri: str) -> None:
     for st in fs.listStatus(hpath(commit_uri)):
         if st.isDirectory():
             fs.delete(st.getPath(), True)
+
+
+#: Burned-claim memo, process-wide: timeline dir → seqs of claimed-but-
+#: never-resolved names already waited out (legacy two-step pointer claims
+#: whose filler crashed). Tables, sidecars and leases are constructed per
+#: micro-batch, so the memo must outlive them — re-paying the stall wait
+#: on every commit would tax the hot path for a name burned forever.
+_BURNED: dict[str, set[int]] = {}
+#: Claim-pointer observation memory for ``claim_is_stalled`` (ptr path →
+#: (signature, first-seen-at)), process-wide for the same reason.
+_CLAIM_SEEN: dict[str, tuple[object, float]] = {}
+_MEMO_MAX = 4096
+
+
+def _bounded(memo: dict) -> dict:
+    """``memo``, emptied first once it holds ``_MEMO_MAX`` entries: a
+    long-lived driver touching many thousands of tables must not grow it
+    without limit. Forgetting costs at most one more stall wait, and
+    ``clear`` is atomic under concurrent publisher threads."""
+    if len(memo) >= _MEMO_MAX:
+        memo.clear()
+    return memo
+
+
+class CommitTimeline:
+    """One named-seq commit log under ``dir``: listing and parsing,
+    seq allocation, staging, the CAS publish, retention, and the wait on
+    unresolved claims. Callers keep only their policy (stage content,
+    retry rule, which seqs to keep).
+
+    ``name_pattern`` formats a commit name from ``seq`` and an optional
+    integer ``tag`` (``"v{seq:012d}_t{tag:012d}"``); it is also the one
+    name shape the listing parses — anything else under ``dir`` is not a
+    commit. Entries are ``(seq, tag, uri)``, seq-ascending, ``tag`` None
+    when the pattern has none and ``uri`` None for a claimed-but-unresolved
+    pointer name: skipped for reads, counted for allocation."""
+
+    def __init__(self, spark, dir: str, name_pattern: str, stage_root: str) -> None:
+        self.spark = spark
+        self.dir = dir
+        self.name_pattern = name_pattern
+        self.stage_root = stage_root
+        self.fs, self.hpath = hadoop_fs(spark, dir)
+        self._name_re = re.compile(
+            "".join(
+                re.escape(literal) + (rf"(?P<{field}>\d+)" if field else "")
+                for literal, field, _, _ in string.Formatter().parse(name_pattern)
+            )
+        )
+        #: Seqs of this log declared burned (shared by every instance).
+        self.burned = _bounded(_BURNED).setdefault(dir, set())
+
+    def name(self, seq: int, tag: int | None = None) -> str:
+        return self.name_pattern.format(seq=seq, tag=tag)
+
+    def entries(self) -> list[tuple[int, int | None, str | None]]:
+        """Every claimed commit of this log — one ``list_commits``."""
+        out = []
+        for name, uri in list_commits(self.fs, self.hpath, self.spark, self.dir):
+            m = self._name_re.fullmatch(name)
+            if m:
+                tag = m.groupdict().get("tag")
+                out.append((int(m["seq"]), None if tag is None else int(tag), uri))
+        out.sort(key=lambda e: (e[0], e[1] or 0))
+        return out
+
+    @staticmethod
+    def resolved(entries):
+        """The readable entries (burned and in-flight names dropped)."""
+        return [e for e in entries if e[2] is not None]
+
+    @staticmethod
+    def next_seq(entries) -> int:
+        """First free seq: past every CLAIMED name, burned ones included —
+        reallocating a burned name would fail the CAS on every retry."""
+        return entries[-1][0] + 1 if entries else 0
+
+    @contextmanager
+    def stage(self):
+        """A fresh stage path, deleted if the body raises — a failing
+        stage write must not leak one uuid dir per retry."""
+        stage = f"{self.stage_root}/{uuid.uuid4().hex}"
+        try:
+            yield stage
+        except BaseException:
+            self._drop(stage)
+            raise
+
+    def _drop(self, path: str) -> None:
+        try:
+            self.fs.delete(self.hpath(path), True)
+        except Exception:
+            pass
+
+    def publish(
+        self, stage: str, seq: int, tag: int | None = None, built_on=None
+    ) -> bool:
+        """CAS-publish ``stage`` as commit ``seq``. True = the commit holds
+        the staged content; False = the name went to another writer, and
+        the stage is deleted — re-list and retry with a fresh seq.
+
+        ``built_on`` is the settled listing an INCREMENTAL stage was
+        derived from (its content folds the newest resolved entry). The log
+        is re-listed once right before the CAS, and the stage counts as
+        lost if the log moved on: a newer name was claimed, or a burned
+        claim resolved late. Without that recheck a stale publisher could
+        win a seq that retention had already deleted below the newest
+        commit, publishing content no reader ever folds, or publish past a
+        late fill it never included."""
+        if built_on is not None:
+            fresh = self.entries()
+            self._unburn(fresh)
+            if self.next_seq(fresh) > self.next_seq(built_on) or _newest_resolved(
+                fresh
+            ) > _newest_resolved(built_on):
+                self._drop(stage)
+                return False
+        self.fs.mkdirs(self.hpath(self.dir))
+        target = f"{self.dir}/{self.name(seq, tag)}"
+        if not publish_commit(self.fs, self.hpath, stage, target):
+            # The rename protocol's move-INTO undo may have consumed it.
+            self._drop(stage)
+            return False
+        # Drop the stage root once empty. Non-recursive: a concurrent
+        # writer's in-flight stage (or pointer content) keeps it.
+        try:
+            self.fs.delete(self.hpath(self.stage_root), False)
+        except Exception:
+            pass
+        return True
+
+    def trim(self, entries, keep) -> None:
+        """Retention: ``delete_commit`` every listed entry whose seq is not
+        in ``keep``."""
+        for seq, tag, uri in entries:
+            if seq not in keep:
+                delete_commit(self.fs, self.hpath, self.dir, self.name(seq, tag), uri)
+
+    def _unburn(self, entries) -> None:
+        # Late resolution: a name once declared burned that now shows
+        # RESOLVED was a live filler after all.
+        self.burned.difference_update(s for s, _, uri in entries if uri is not None)
+
+    def settle(self, entries):
+        """Wait out claimed-but-unresolved names above the newest resolved
+        entry, then return the listing to build on. Incremental publishers
+        (sidecar, rollup) fold the newest resolved commit into the next:
+        building past an in-flight claim — a filler on a store where claim
+        and fill are two visible steps — would publish a successor that
+        silently excludes it. The wait is stall-based
+        (``claim_is_stalled``): it lasts while a claim shows liveness, and
+        only claims quiescent for the whole budget are declared burned —
+        remembered in ``burned``, so later publishes skip the wait."""
+        delay = 0.05
+        while True:
+            self._unburn(entries)
+            top = _newest_resolved(entries)
+            gap = [
+                (s, t) for s, t, uri in entries
+                if s > top and uri is None and s not in self.burned
+            ]
+            if not gap:
+                return entries
+            seen = _bounded(_CLAIM_SEEN)
+            if all(
+                claim_is_stalled(
+                    self.fs, self.hpath,
+                    f"{self.dir}/{self.name(s, t)}.commit", seen,
+                )
+                for s, t in gap
+            ):
+                self.burned.update(s for s, _ in gap)
+                return entries
+            time.sleep(delay)
+            delay = min(delay * 2, 0.4)
+            entries = self.entries()
+
+
+def _newest_resolved(entries) -> int:
+    return max((s for s, _, uri in entries if uri is not None), default=-1)
 
 
 def hadoop_fs(spark, path: str):
@@ -595,8 +784,6 @@ def recover_table_swap(spark, path: str) -> None:
 
     No-op (one fs.exists) when no journal is present — the steady state
     every read/exists probe pays."""
-    import json as _json
-
     fs, hpath = hadoop_fs(spark, path)
     journal = table_swap_journal(path)
     if not fs.exists(hpath(journal)):
@@ -605,7 +792,7 @@ def recover_table_swap(spark, path: str) -> None:
     try:
         data = read_small_file(fs, hpath, spark, journal)
         if data:
-            j = _json.loads(data.decode("utf-8"))
+            j = json.loads(data.decode("utf-8"))
             stage, retire = j["stage"], j["retire"]
     except Exception:
         stage = retire = None
@@ -623,7 +810,14 @@ def recover_table_swap(spark, path: str) -> None:
     if have_path and have_stage:
         fs.delete(hpath(stage), True)
     elif not have_path and have_stage:
-        if not fs.rename(hpath(stage), hpath(path)):
+        # A failed rename is fine when the table is there after all: the
+        # in-flight writer (or another healer) published it meanwhile.
+        # (Hadoop raises, rather than returns False, on a vanished source.)
+        try:
+            moved = fs.rename(hpath(stage), hpath(path))
+        except Exception:
+            moved = False
+        if not moved and not fs.exists(hpath(path)):
             raise RuntimeError(
                 f"table swap recovery: roll-forward rename {stage} -> "
                 f"{path} failed"
@@ -671,18 +865,15 @@ def swap_table_dir(
 
     ``_test_after_*`` are crash-injection seams for the deterministic
     recovery tests; never passed in production code."""
-    import json as _json
-    import uuid as _uuid
-
     recover_table_swap(spark, path)  # clear any stale torn swap first
     fs, hpath = hadoop_fs(spark, path)
-    retire = f"{path}__retire/{_uuid.uuid4().hex}"
+    retire = f"{path}__retire/{uuid.uuid4().hex}"
     journal = table_swap_journal(path)
     write_small_file(
         fs,
         hpath,
         journal,
-        _json.dumps({"stage": stage, "retire": retire}).encode("utf-8"),
+        json.dumps({"stage": stage, "retire": retire}).encode("utf-8"),
     )
     if _test_after_journal is not None:
         _test_after_journal()
@@ -693,17 +884,29 @@ def swap_table_dir(
             raise RuntimeError(f"table swap: could not retire {path}")
     if _test_after_retire is not None:
         _test_after_retire()
-    if not fs.rename(hpath(stage), hpath(path)):
-        try:
-            if fs.exists(hpath(retire)):
-                fs.rename(hpath(retire), hpath(path))
-        finally:
-            fs.delete(hpath(journal), False)
-        raise RuntimeError(
-            f"table swap: could not publish {stage} as {path}"
-        )
     base = stage.rstrip("/").rsplit("/", 1)[-1]
-    if fs.exists(hpath(f"{path}/{base}")):
+    try:
+        renamed = fs.rename(hpath(stage), hpath(path))
+    except Exception:
+        if fs.exists(hpath(stage)):
+            raise  # a real failure: the journal stays for recovery
+        renamed = False  # the source vanished: see below
+    if not renamed:
+        if fs.exists(hpath(stage)) or not fs.exists(hpath(path)):
+            # Roll back — but never rename the retired copy onto an
+            # existing table dir: LocalFileSystem would nest it inside.
+            try:
+                if not fs.exists(hpath(path)) and fs.exists(hpath(retire)):
+                    fs.rename(hpath(retire), hpath(path))
+            finally:
+                fs.delete(hpath(journal), False)
+            raise RuntimeError(
+                f"table swap: could not publish {stage} as {path}"
+            )
+        # Our stage is gone and the table is there: a concurrent
+        # recover_table_swap (an unleased reader's heal) rolled THIS swap
+        # forward. The publish is done; only cleanup remains.
+    elif fs.exists(hpath(f"{path}/{base}")):
         # The destination reappeared between retire and publish (an
         # external writer bypassing the lease): LocalFileSystem's rename
         # moved the stage INSIDE it. Undo and fail loudly rather than
@@ -712,7 +915,8 @@ def swap_table_dir(
         fs.delete(hpath(journal), False)
         raise RuntimeError(
             f"table swap: {path} was recreated mid-swap by a writer "
-            "outside the lease — publish aborted"
+            f"outside the lease — publish aborted; the previous table is "
+            f"kept at {retire}"
         )
     if _test_after_publish is not None:
         _test_after_publish()

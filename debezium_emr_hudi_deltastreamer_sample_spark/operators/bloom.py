@@ -64,8 +64,9 @@ def build_bloom(
     strings. One execution of the (typically shuffle-heavy distinct-gram)
     plan instead of the historical persist + count + toLocalIterator
     (two passes, driver-serial hashing). ``n`` falls out of the collected
-    length, so sizing needs no separate count; ``max_items`` keeps the
-    same guard-rail contract (16 B × max_items = 80 MB driver ceiling).
+    length, so sizing needs no separate count; the collect is capped at
+    ``max_items`` + 1 rows, so the guard rail raises before more than
+    16 B × max_items (80 MB) reach the driver.
     Bit-identical to the historical build: same hash pairs, same (m, k)
     from the same n, and OR is order-insensitive.
 
@@ -84,12 +85,15 @@ def build_bloom(
         df.filter(F.col(col).isNotNull())
         .select(col)
         .mapInPandas(hash_parts, schema="h1 long, h2 long")
+        # One row past the cap is enough to trip the guard below: an
+        # oversized build side never reaches the driver in full.
+        .limit(max_items + 1)
         .toPandas()
     )
     n = len(pairs)
     if n > max_items:
         raise ValueError(
-            f"bloom build side has {n} items > max_items={max_items}; "
+            f"bloom build side has more than max_items={max_items} items; "
             "use the exact broadcast semi-join or shard the filter"
         )
     m, k = bloom_params(n, fp_rate)

@@ -100,11 +100,6 @@ class IncrementalJoinView:
         self.view = KeyedTable(
             spark, f"{path}_view", keys=fact_keys, ordering=(_SEQ,),
             op_col="_op", partition_by=partition_by,
-            # A partitioned view can GAIN dim columns through schema
-            # reconciliation while only affected partitions rewrite —
-            # schema merging keeps the late-added columns visible across
-            # the whole view (see KeyedTable.merge_schema).
-            merge_schema=bool(partition_by),
         )
 
     # -- apply --------------------------------------------------------------

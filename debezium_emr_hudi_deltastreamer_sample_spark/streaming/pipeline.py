@@ -65,7 +65,6 @@ def upsert_batch_processor(
     ordering: Sequence[str] = ("_lsn",),
     partition_by: Sequence[str] = (),
     parser: Callable[[DataFrame], DataFrame] | None = None,
-    merge_schema: bool = False,
 ) -> Callable[[DataFrame, int], None]:
     """Per-micro-batch COW upsert (the intended DeltaStreamer lifecycle,
     SURVEY.md §3.2): parse envelope → order by LSN → latest-wins merge with
@@ -80,13 +79,6 @@ def upsert_batch_processor(
     narrow missing-vs-broken table probe (a transient read failure must
     abort the batch for retry, never bootstrap-overwrite the table down
     to one micro-batch), and pre-overwrite materialization.
-
-    ``merge_schema``: set when the feed can DRIFT (gain columns, B11) AND
-    the table is partitioned — dynamic overwrite leaves untouched
-    partitions on the old schema, so without parquet schema merging the
-    next read infers from one arbitrary footer and the drifted column
-    nondeterministically vanishes (KeyedTable.merge_schema; the MOR
-    processor has the same knob for the same reason).
     """
     def process(df: DataFrame, batch_id: int) -> None:
         from ..table import KeyedTable
@@ -110,7 +102,6 @@ def upsert_batch_processor(
             ordering=list(ordering),
             partition_by=list(partition_by),
             op_col="op",
-            merge_schema=merge_schema,
         ).upsert(changes)
 
     return process
@@ -123,7 +114,6 @@ def mor_batch_processor(
     ordering: Sequence[str] = ("_lsn",),
     auto_compact_deltas: int | None = None,
     async_compact: bool = False,
-    merge_schema: bool = False,
 ) -> Callable[[DataFrame, int], None]:
     """Per-micro-batch MERGE_ON_READ ingest (Hudi's other
     ``write.table.type`` next to `upsert_batch_processor`'s COW): parse
@@ -157,7 +147,6 @@ def mor_batch_processor(
             op_col="op",
             auto_compact_deltas=auto_compact_deltas,
             async_compact=async_compact,
-            merge_schema=merge_schema,
         )
         table.append_changes(changes, batch_id)
 

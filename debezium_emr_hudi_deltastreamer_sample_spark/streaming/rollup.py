@@ -20,10 +20,11 @@ marker file written into the stage BEFORE the rename, so there is still
 no separate marker write that could diverge from the data. A
 crash before the publish leaves only staging garbage (never visible to
 readers); after it the batch is durably applied. The publish goes through
-fsutil.publish_commit: atomic directory rename on local/HDFS, and on
-object stores (where directory rename is a torn copy+delete) the
-commit-POINTER protocol — stage immutably, CAS one tiny pointer file via
-conditional create — so the single-rename guarantee holds there too.
+the commit log's fsutil.CommitTimeline: atomic directory rename on
+local/HDFS, and on object stores (where directory rename is a torn
+copy+delete) the commit-POINTER protocol — stage immutably, CAS one tiny
+pointer file via conditional create — so the single-rename guarantee
+holds there too.
 
 Replay/restart semantics: Structured Streaming batch ids are monotone PER
 CHECKPOINT, so dedup is keyed by (run_id, batch_id) where ``run_id``
@@ -40,24 +41,21 @@ standalone on batch appends.
 from __future__ import annotations
 
 import re
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..fsutil import claim_is_stalled, publish_commit
+from ..fsutil import CommitTimeline
 
-# Current commit naming: seq-only directory name (true CAS — two writers
-# at the same seq MUST collide on the name, whatever batch/run they carry)
-# with the (batch, run) provenance as an empty marker FILE inside the
-# commit. The pre-round-6 naming carried (seq, batch, run) in the dir name
-# itself, which broke the compare-and-swap: two concurrent writers of
-# different batches built DIFFERENT names at the SAME seq, both renames
-# succeeded, and the next tip folded only one of them — permanent
-# undercount. Old-style names are still parsed for in-place upgrades.
-_COMMIT_RE = re.compile(r"^c(\d{12})$")
-_COMMIT_RE_LEGACY = re.compile(r"^c(\d{12})_b(\d{12})_(.+)$")
+# Commit naming: seq-only directory name (true CAS — two writers at the
+# same seq MUST collide on the name, whatever batch/run they carry) with
+# the (batch, run) provenance as an empty marker FILE inside the commit.
+# Carrying (seq, batch, run) in the name itself broke the compare-and-swap:
+# two concurrent writers of different batches built DIFFERENT names at the
+# SAME seq, both renames succeeded, and the next tip folded only one of
+# them — permanent undercount.
+_COMMIT_NAME = "c{seq:012d}"
 _META_RE = re.compile(r"^_applied_b(\d{12})_(.+)$")
 
 
@@ -88,16 +86,9 @@ class IncrementalRollup:
         self.keys = list(keys)
         self.value_col = value_col
         self.keep_commits = max(1, keep_commits)
-        #: Claimed-but-never-resolved commit seqs this instance has already
-        #: waited out (legacy two-step pointer claims whose filler crashed):
-        #: once declared burned, later batches skip the unresolved-tip wait.
-        #: A seq that later RESOLVES leaves the set (late fill — the claim
-        #: was alive after all) so the next merge builds from it.
-        self._burned_seqs: set[int] = set()
-        #: Claim-pointer observation memory for the stall-based burned
-        #: arbiter (fsutil.claim_is_stalled): ptr path → (signature,
-        #: first-seen-at-monotonic).
-        self._claim_seen: dict[str, tuple[object, float]] = {}
+        self._timeline = CommitTimeline(
+            spark, f"{path}__commits", _COMMIT_NAME, f"{path}__stage"
+        )
         # Reserved partials-schema names: a key/ts/value column with one of
         # these would emit duplicate columns inside _partials (opaque
         # AMBIGUOUS_REFERENCE mid-apply) or be silently shadowed in read()
@@ -138,50 +129,21 @@ class IncrementalRollup:
     # -- commit log ---------------------------------------------------------
 
     def _hadoop(self):
-        from ..fsutil import hadoop_fs
-
-        return hadoop_fs(self.spark, self.path)
+        return self._timeline.fs, self._timeline.hpath
 
     def _commits_dir(self) -> str:
-        return f"{self.path}__commits"
+        return self._timeline.dir
 
-    def _scan(self) -> tuple[list[tuple[int, int, str, str, str]], int]:
-        """(committed batches, next free seq). Commits come back as
+    def _provenance(self, entries) -> list[tuple[int, int, str, str, str]]:
+        """Resolved commits of ``entries`` with their provenance, as
         (seq, batch_id, run_id, content_uri, commit_name), seq-ascending.
-        One listing for the commit entries plus one per RETAINED commit for
-        its provenance marker (retention keeps only keep_commits entries,
-        so this stays O(keep_commits) namenode calls — no data files are
-        opened). ``next free seq`` counts every CLAIMED name, including
-        in-flight/burned pointer claims (fsutil.pointer_commit content=
-        None) — those names are taken forever and reallocating one would
-        fail the CAS on every retry."""
-        from ..fsutil import list_commits
-
+        One member listing per RETAINED commit for its marker (retention
+        keeps only keep_commits entries plus each run's newest, so this
+        stays O(keep_commits) namenode calls — no data files are
+        opened)."""
         fs, hpath = self._hadoop()
         out = []
-        max_claimed = -1
-        for name, uri in list_commits(fs, hpath, self.spark, self._commits_dir()):
-            legacy = _COMMIT_RE_LEGACY.match(name)
-            m = _COMMIT_RE.match(name)
-            if legacy:
-                max_claimed = max(max_claimed, int(legacy.group(1)))
-                if uri is not None:
-                    out.append(
-                        (
-                            int(legacy.group(1)),
-                            int(legacy.group(2)),
-                            legacy.group(3),
-                            uri,
-                            name,
-                        )
-                    )
-                continue
-            if not m:
-                continue
-            max_claimed = max(max_claimed, int(m.group(1)))
-            if uri is None:
-                continue  # in-flight/burned pointer: name taken, no content
-            marker = None
+        for seq, _, uri in CommitTimeline.resolved(entries):
             try:
                 members = fs.listStatus(hpath(uri))
             except Exception:
@@ -191,6 +153,7 @@ class IncrementalRollup:
                 # (run, batch) high-water is always superseded by a
                 # retained one — skipping cannot re-open replay dedup.
                 continue
+            marker = None
             for member in members:
                 if member.isDirectory():
                     # Crash garbage from a torn move-INTO undo (see
@@ -201,22 +164,18 @@ class IncrementalRollup:
                 meta = _META_RE.match(member.getPath().getName())
                 if meta and marker is None:
                     marker = (
-                        int(m.group(1)),
-                        int(meta.group(1)),
-                        meta.group(2),
-                        uri,
-                        name,
+                        seq, int(meta.group(1)), meta.group(2), uri,
+                        self._timeline.name(seq),
                     )
+            # A commit with no marker would be torn — the marker is written
+            # into the STAGE before the publish, so it cannot happen;
+            # ignore rather than guess provenance.
             if marker is not None:
                 out.append(marker)
-            # A seq-named dir with no marker would be a torn commit — the
-            # marker is written into the STAGE before the atomic rename,
-            # so it cannot happen; ignore rather than guess provenance.
-        out.sort()
-        return out, max_claimed + 1
+        return out
 
     def _commits(self) -> list[tuple[int, int, str, str, str]]:
-        return self._scan()[0]
+        return self._provenance(self._timeline.entries())
 
     @staticmethod
     def _safe_run(run_id: str) -> str:
@@ -248,6 +207,7 @@ class IncrementalRollup:
         and published with one rename whose target name IS the applied-batch
         record — data and marker cannot diverge (see module docstring)."""
         run = self._safe_run(run_id)
+        tl = self._timeline
         fs, hpath = self._hadoop()
         # Stall-based retry budget (the SchemaSidecar.publish pattern): a
         # lost CAS where the commit seq MOVED is another run making
@@ -257,51 +217,12 @@ class IncrementalRollup:
         # publishers under real contention (tests/test_concurrency_hunt).
         stalled, last_mark = 0, (-1, -1)
         while stalled < 5:
-            commits, next_seq = self._scan()
-            # Late resolution: a seq we once declared burned that now shows
-            # RESOLVED was a live filler after all — drop it so the merge
-            # below builds from it instead of forever excluding its data.
-            self._burned_seqs.difference_update(s for s, _, _, _, _ in commits)
-            # Unresolved-tip guard: a CLAIMED name newer than the newest
-            # RESOLVED commit means an in-flight publisher (on a store
-            # where claim and fill are still two visible steps — the env-
-            # override HDFS pointer path; local/object-store claims are
-            # atomic-with-content since round 11) or a legacy burned claim.
-            # Merging from commits[-1] past it would publish a successor
-            # that EXCLUDES the in-flight commit — a silent lost update its
-            # (run, batch) dedup marker then makes permanent. Stall-based
-            # budget (fsutil.claim_is_stalled): keep waiting while the
-            # claim pointer shows liveness; declare burned only after it
-            # has been quiescent for the full stall budget — a fixed 4×50 ms
-            # wait burned any LIVE filler that paused >200 ms (GC pause,
-            # slow namenode) and made the exclusion permanent.
-            import time as _time
-
-            delay = 0.05
-            while True:
-                tip = commits[-1][0] if commits else -1
-                gap = [
-                    s for s in range(tip + 1, next_seq)
-                    if s not in self._burned_seqs
-                ]
-                if not gap:
-                    break
-                if all(
-                    claim_is_stalled(
-                        fs, hpath,
-                        f"{self._commits_dir()}/c{s:012d}.commit",
-                        self._claim_seen,
-                    )
-                    for s in gap
-                ):
-                    self._burned_seqs.update(gap)
-                    break
-                _time.sleep(delay)
-                delay = min(delay * 2, 0.4)
-                commits, next_seq = self._scan()
-                self._burned_seqs.difference_update(
-                    s for s, _, _, _, _ in commits
-                )
+            # settle: merging from the newest resolved commit PAST an
+            # in-flight claim would publish a successor that EXCLUDES it —
+            # a silent lost update its (run, batch) marker makes permanent.
+            entries = tl.settle(tl.entries())
+            commits = self._provenance(entries)
+            next_seq = tl.next_seq(entries)
             tip = commits[-1][0] if commits else -1
             stalled = 0 if (next_seq, tip) > last_mark else stalled + 1
             last_mark = (next_seq, tip)
@@ -324,74 +245,34 @@ class IncrementalRollup:
                 )
             else:
                 merged = partial
-            token = f"c{next_seq:012d}"  # seq-ONLY: same-seq writers must collide
-            stage = f"{self.path}__stage/{uuid.uuid4().hex}"
             # The staged write executes the merge plan exactly once (the
             # plan reads the PREVIOUS commit, the stage is fresh — no
             # read-under-overwrite), so no checkpoint materialization is
             # needed; retention keeps the read commit alive through the
             # write (keep_commits >= 2 and the per-run newest exemption).
-            # Any failure after staging deletes the stage (same
-            # BaseException contract as DeltaLogTable.compact) — a
-            # deterministically failing batch must not leak one uuid dir
-            # per foreachBatch retry forever.
-            try:
+            with tl.stage() as stage:
                 merged.write.mode("overwrite").parquet(stage)
-                # Provenance marker INSIDE the stage, before the atomic
-                # rename — data and applied-batch record publish together
+                # Provenance marker INSIDE the stage, before the publish —
+                # data and applied-batch record publish together
                 # (underscore-prefixed: parquet readers ignore it).
                 fs.createNewFile(
                     hpath(f"{stage}/_applied_b{batch_id:012d}_{run}")
                 )
-                fs.mkdirs(hpath(self._commits_dir()))
-                # Late-resolution recheck: when this merge builds PAST
-                # burned names, one final listing right before the CAS —
-                # if any of them resolved meanwhile (a stalled-but-alive
-                # legacy filler finished its fill), our merge is stale and
-                # publishing it would permanently exclude that commit's
-                # batch. Rebuild from the new tip instead. Costs one
-                # listing, and only on the burned-gap path — never on the
-                # contiguous hot path.
-                if any(
-                    s in self._burned_seqs for s in range(tip + 1, next_seq)
-                ):
-                    fresh, _ = self._scan()
-                    fresh_tip = fresh[-1][0] if fresh else -1
-                    if fresh_tip > tip:
-                        self._burned_seqs.difference_update(
-                            s for s, _, _, _, _ in fresh
-                        )
-                        fs.delete(hpath(stage), True)
-                        continue
-                committed = publish_commit(
-                    fs, hpath, stage, f"{self._commits_dir()}/{token}"
-                )
-            except BaseException:
-                fs.delete(hpath(stage), True)
-                raise
+                committed = tl.publish(stage, next_seq, built_on=entries)
             if committed:
-                self._trim(commits, run, fs, hpath)
+                self._trim(entries, commits, run)
                 return
-            # Rename lost a race: a concurrent writer published THIS seq
-            # first — a replay of this very batch (caught by the
-            # high-water check on the next pass) or a different batch,
-            # making our staged merge stale. Re-list and rebuild from the
-            # new tip rather than publishing a merge that would drop the
-            # other batch's data. With seq-only names this detection is
-            # total: ANY same-seq publication collides on the name.
-            fs.delete(hpath(stage), True)
+            # Lost the seq: a concurrent writer published first — a replay
+            # of this very batch (caught by the high-water check on the
+            # next pass) or a different batch, making our staged merge
+            # stale. Rebuild from the new tip rather than publishing a
+            # merge that would drop the other batch's data.
         raise RuntimeError(
             f"could not publish rollup commit for batch {batch_id} (run {run}) "
             f"after 5 attempts — persistent rename failures at {self._commits_dir()}"
         )
 
-    def _trim(
-        self,
-        superseded: list[tuple[int, int, str, str, str]],
-        committing_run: str,
-        fs,
-        hpath,
-    ) -> None:
+    def _trim(self, entries, superseded, committing_run: str) -> None:
         """Retention: best-effort removal of superseded commits (readers of
         a just-superseded commit finish their scan; parquet files are
         immutable until deleted). A run's NEWEST commit is never trimmed —
@@ -399,19 +280,16 @@ class IncrementalRollup:
         high-water-mark, and deleting it would let an at-least-once replay
         from that run re-apply (double-count) its last batch. The run that
         just committed is exempt: its new commit now carries its
-        high-water-mark, so its older commits are fair game."""
-        from ..fsutil import delete_commit
-
+        high-water-mark, so its older commits are fair game. Unresolved
+        names are left alone."""
+        keep = {s for s, _, uri in entries if uri is None}
+        if self.keep_commits > 1:
+            keep |= {s for s, _, _, _, _ in superseded[-(self.keep_commits - 1):]}
         newest_per_run: dict[str, int] = {}
         for seq, _, r, _, _ in superseded:
             if r != committing_run:
                 newest_per_run[r] = max(newest_per_run.get(r, -1), seq)
-        keep = superseded[-(self.keep_commits - 1):] if self.keep_commits > 1 else []
-        keep_uris = {uri for _, _, _, uri, _ in keep}
-        for seq, _, r, uri, name in superseded:
-            if uri in keep_uris or newest_per_run.get(r) == seq:
-                continue
-            delete_commit(fs, hpath, self._commits_dir(), name, uri)
+        self._timeline.trim(entries, keep | set(newest_per_run.values()))
 
     def processor(self, run_id: str = "default"):
         """foreachBatch-compatible callable. Pass a ``run_id`` that

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .fsutil import CommitTimeline
 from .operators.merge import cdc_meta_columns, merge_upsert
 
 
@@ -52,98 +53,69 @@ def _union_schema(base: T.StructType, extra: T.StructType) -> T.StructType:
 class SchemaSidecar:
     """The table's authoritative current schema, persisted in the commit
     path — how every commit-log table format (Hudi/Delta/Iceberg) closes
-    the schema-drift footgun this engine had behind the ``merge_schema``
-    knob: a PARTITIONED table that gains a column through reconciliation
-    (B11) rewrites only touched partitions, so untouched partitions keep
-    old-schema footers, and a footer-inferred read picks ONE arbitrary
-    footer — the drifted column nondeterministically vanishes, and the
-    upsert's own ``current = self.read()`` then rewrites partitions
-    WITHOUT it (permanent loss, no error).
+    the schema-drift footgun: a PARTITIONED table that gains a column
+    through reconciliation (B11) rewrites only touched partitions, so
+    untouched partitions keep old-schema footers, and a footer-inferred
+    read picks ONE arbitrary footer — the drifted column
+    nondeterministically vanishes, and the upsert's own
+    ``current = self.read()`` then rewrites partitions WITHOUT it
+    (permanent loss, no error).
 
-    Layout: ``{table}__schema/v{seq:012d}/schema.json`` (StructType.json).
-    Publish is the repo's standard stage + commit-CAS (fsutil.publish_commit)
-    with a monotone-union retry loop, so racing writers can only WIDEN the
-    schema, never clobber each other's columns; retention keeps the two
-    newest versions (in-flight readers of the previous one stay valid).
-    Readers (``KeyedTable.read``, MOR delta reads) apply the sidecar as the
+    Layout: ``{table}__schema/v{seq:012d}/schema.json`` (StructType.json),
+    a ``fsutil.CommitTimeline``. Publish is a monotone-union retry loop
+    over the timeline's CAS, so racing writers can only WIDEN the schema,
+    never clobber each other's columns; retention keeps the newest
+    resolved predecessor (in-flight readers of it stay valid). Readers
+    (``KeyedTable.read``, MOR delta reads) apply the sidecar as the
     explicit parquet read schema — per-file missing columns null-fill,
     column order is stable, and no footer lottery remains. Missing or
-    unreadable sidecar falls back to today's footer inference (+ the
-    ``merge_schema`` knob), so pre-sidecar tables stay readable."""
-
-    #: Claimed-but-never-resolved sidecar versions already waited out
-    #: (legacy two-step pointer claims whose filler crashed). Process-wide:
-    #: sidecar objects are constructed per micro-batch, and re-paying the
-    #: unresolved-tip wait on every commit would tax the hot path for a
-    #: name that is burned forever.
-    _BURNED_VERSIONS: set[tuple[str, int]] = set()
-
-    #: Claim-pointer observation memory for the stall-based burned arbiter
-    #: (fsutil.claim_is_stalled), process-wide for the same reason as
-    #: _BURNED_VERSIONS. Bounded: entries are (ptr path → signature) pairs
-    #: and a long-lived driver touching many tables must not grow this
-    #: without limit (FIFO eviction, like _LEASE_OWNER_CACHE).
-    _CLAIM_SEEN: dict[str, tuple[object, float]] = {}
+    unreadable sidecar falls back to footer inference, so pre-sidecar
+    tables stay readable."""
 
     def __init__(self, spark: SparkSession, table_path: str) -> None:
         self.spark = spark
         self.dir = f"{table_path}__schema"
         self.stage_root = f"{table_path}__schema_stage"
+        self._timeline = CommitTimeline(
+            spark, self.dir, "v{seq:012d}", self.stage_root
+        )
 
     def _fs(self):
-        from .fsutil import hadoop_fs
+        return self._timeline.fs, self._timeline.hpath
 
-        return hadoop_fs(self.spark, self.dir)
-
-    def _versions(self, fs, hpath) -> list[tuple[int, str | None]]:
-        """(seq, content_uri) pairs, seq-ascending. ``content_uri`` is None
-        for an in-flight/burned pointer commit (claim without fill — see
-        fsutil.pointer_commit): unreadable, but its NAME is allocated, so
-        publishers must count it and readers must skip it."""
-        from .fsutil import list_commits
-
-        out = []
-        for name, content in list_commits(fs, hpath, self.spark, self.dir):
-            if name.startswith("v") and name[1:].isdigit():
-                out.append((int(name[1:]), content))
-        out.sort()
-        return out
-
-    def _parse(self, fs, hpath, uri: str | None) -> T.StructType | None:
+    def _newest(self, entries) -> T.StructType | None:
+        """Newest PARSEABLE schema among ``entries``. A burned pointer
+        (uri None) or a version trimmed since the listing falls through to
+        its predecessor — never to "no sidecar", which would skip the
+        union and narrow the published schema."""
         import json as _json
 
         from .fsutil import read_small_file
 
-        if uri is None:
-            return None
-        try:
-            data = read_small_file(fs, hpath, self.spark, f"{uri}/schema.json")
-            if data is None:
-                return None
-            return T.StructType.fromJson(_json.loads(data.decode("utf-8")))
-        except Exception:
-            return None
+        fs, hpath = self._fs()
+        for _, _, uri in reversed(entries):
+            if uri is None:
+                continue
+            try:
+                data = read_small_file(fs, hpath, self.spark, f"{uri}/schema.json")
+                if data is not None:
+                    return T.StructType.fromJson(_json.loads(data.decode("utf-8")))
+            except Exception:
+                pass
+        return None
 
     def current(self) -> T.StructType | None:
         """Newest parseable persisted schema, or None (no sidecar — caller
-        falls back to footer inference). Tries the previous version when
-        the newest fails to read: a concurrent publisher's trim can delete
-        a version between the listing and the read, and falling all the
-        way back to footer inference would transiently reopen the exact
-        vanishing-column hole the sidecar exists to close. If EVERY listed
-        version fails to parse (two publishes landed between this reader's
-        listing and its reads, so retention consumed the whole list), the
-        listing is retried — a table that HAS a sidecar must not
-        transiently read as if it never did."""
-        fs, hpath = self._fs()
+        falls back to footer inference). If EVERY listed version fails to
+        parse (two publishes landed between this reader's listing and its
+        reads, so retention consumed the whole list), the listing is
+        retried — a table that HAS a sidecar must not transiently read as
+        if it never did."""
         for _attempt in range(3):
-            versions = self._versions(fs, hpath)
-            for _, uri in reversed(versions):
-                schema = self._parse(fs, hpath, uri)
-                if schema is not None:
-                    return schema
-            if not versions:
-                return None
+            entries = self._timeline.entries()
+            schema = self._newest(entries)
+            if schema is not None or not entries:
+                return schema
         return None
 
     def publish(self, schema: T.StructType, reset: bool = False) -> None:
@@ -151,142 +123,37 @@ class SchemaSidecar:
         replaces it exactly — table init/replace). No-ops without a write
         when nothing changed — the stable-schema hot path pays one listing
         and one small-file read per commit."""
-        import uuid as _uuid
+        from .fsutil import write_small_file
 
-        from .fsutil import delete_commit, publish_commit, write_small_file
-
+        tl = self._timeline
         fs, hpath = self._fs()
         # Retry budget counts only STALLED attempts (no new version landed
-        # since the last look): a lost CAS where the winner's seq moved IS
-        # system progress — the union-only-grows loop converges — and a
-        # fixed attempt count starved publishers under real contention
-        # (found by tests/test_concurrency_hunt.py: 4 racing publishers ×
-        # pointer protocol exhausted 5 attempts while the table was
-        # perfectly healthy).
-        stalled, last_seq = 0, -1
+        # since the last look): a lost CAS where the log moved IS system
+        # progress — the union-only-grows loop converges — and a fixed
+        # attempt count starved publishers under real contention (4 racing
+        # publishers × pointer protocol, tests/test_concurrency_hunt.py).
+        stalled, last_next = 0, 0
         while stalled < 5:
-            versions = self._versions(fs, hpath)
-            # Late resolution: a version we once declared burned that now
-            # shows RESOLVED was a live filler after all — drop it so the
-            # union below includes its columns.
-            SchemaSidecar._BURNED_VERSIONS.difference_update(
-                (self.dir, s) for s, uri in versions if uri is not None
-            )
-            # Unresolved-tip guard (same rationale as IncrementalRollup.
-            # apply_batch): a claimed name newer than the newest parseable
-            # version may be an in-flight publisher on a store where claim
-            # and fill are two visible steps — unioning against the OLDER
-            # version and publishing past the in-flight one would reopen
-            # the vanishing-column hole the sidecar exists to close.
-            # Stall-based budget (fsutil.claim_is_stalled): wait while the
-            # claim pointer shows liveness; only a claim quiescent for the
-            # full budget is burned — a fixed 4×50 ms wait burned any LIVE
-            # filler that paused >200 ms between create and close.
-            import time as _time
-
-            from .fsutil import claim_is_stalled
-
-            delay = 0.05
-            while (
-                versions
-                and versions[-1][1] is None
-                and (self.dir, versions[-1][0])
-                not in SchemaSidecar._BURNED_VERSIONS
-            ):
-                while len(SchemaSidecar._CLAIM_SEEN) >= 4096:
-                    SchemaSidecar._CLAIM_SEEN.pop(
-                        next(iter(SchemaSidecar._CLAIM_SEEN))
-                    )
-                if claim_is_stalled(
-                    fs, hpath,
-                    f"{self.dir}/v{versions[-1][0]:012d}.commit",
-                    SchemaSidecar._CLAIM_SEEN,
-                ):
-                    SchemaSidecar._BURNED_VERSIONS.add(
-                        (self.dir, versions[-1][0])
-                    )
-                    break
-                _time.sleep(delay)
-                delay = min(delay * 2, 0.4)
-                versions = self._versions(fs, hpath)
-                SchemaSidecar._BURNED_VERSIONS.difference_update(
-                    (self.dir, s) for s, uri in versions if uri is not None
-                )
-            top_seq = versions[-1][0] if versions else -1
-            stalled = 0 if top_seq > last_seq else stalled + 1
-            last_seq = top_seq
-            # Newest PARSEABLE version — a burned pointer (content=None)
-            # must not masquerade as "no sidecar": with reset=False that
-            # would skip the union and narrow the published schema.
-            cur = None
-            for _, uri in reversed(versions):
-                cur = self._parse(fs, hpath, uri)
-                if cur is not None:
-                    break
-            want = (
-                schema
-                if (reset or cur is None)
-                else _union_schema(cur, schema)
-            )
+            # settle: union against an in-flight WIDER version, never past it.
+            entries = tl.settle(tl.entries())
+            seq = tl.next_seq(entries)
+            stalled = 0 if seq > last_next else stalled + 1
+            last_next = seq
+            cur = self._newest(entries)
+            want = schema if (reset or cur is None) else _union_schema(cur, schema)
             if cur is not None and cur.json() == want.json():
                 return
-            stage = f"{self.stage_root}/{_uuid.uuid4().hex}"
-            fs.mkdirs(hpath(stage))
-            write_small_file(
-                fs, hpath, f"{stage}/schema.json", want.json().encode("utf-8")
-            )
-            seq = versions[-1][0] + 1 if versions else 0
-            # Late-resolution recheck: when publishing past a burned tip,
-            # one final listing right before the CAS — if a claim resolved
-            # meanwhile (stalled-but-alive filler finished), the schema we
-            # unioned from is stale and publishing past it could narrow
-            # the sidecar. Rebuild instead. One listing, only on the
-            # burned-tip path — never when the tip was resolved.
-            if versions and versions[-1][1] is None:
-                old_resolved = max(
-                    (s for s, uri in versions if uri is not None), default=-1
+            with tl.stage() as stage:
+                fs.mkdirs(hpath(stage))
+                write_small_file(
+                    fs, hpath, f"{stage}/schema.json", want.json().encode("utf-8")
                 )
-                fresh = self._versions(fs, hpath)
-                if max(
-                    (s for s, uri in fresh if uri is not None), default=-1
-                ) > old_resolved:
-                    SchemaSidecar._BURNED_VERSIONS.difference_update(
-                        (self.dir, s) for s, uri in fresh if uri is not None
-                    )
-                    try:
-                        fs.delete(hpath(stage), True)
-                    except Exception:
-                        pass
-                    continue
-            if publish_commit(fs, hpath, stage, f"{self.dir}/v{seq:012d}"):
-                # Retention: keep this one + the newest RESOLVED
-                # predecessor (in-flight readers of the previous version
-                # stay valid); drop everything else, burned pointer names
-                # included — this is their GC. Keeping versions[-1]
-                # unconditionally retained a BURNED tip while deleting the
-                # newest parseable predecessor, silently dropping the
-                # keep-one-predecessor guarantee exactly when the tip was
-                # unreadable.
-                keep_prev = max(
-                    (s for s, uri in versions if uri is not None),
-                    default=None,
-                )
-                for s, uri in versions:
-                    if s == keep_prev:
-                        continue
-                    delete_commit(fs, hpath, self.dir, f"v{s:012d}", uri)
-                try:
-                    fs.delete(hpath(self.stage_root), False)
-                except Exception:
-                    pass
+                won = tl.publish(stage, seq, built_on=entries)
+            if won:
+                # Keep the newest RESOLVED predecessor; burned names go.
+                resolved = tl.resolved(entries)
+                tl.trim(entries, {resolved[-1][0]} if resolved else ())
                 return
-            # Lost the CAS to a concurrent publisher: drop our stage (if
-            # the move-INTO undo didn't consume it), re-read, re-union —
-            # the loop converges because the union only grows.
-            try:
-                fs.delete(hpath(stage), True)
-            except Exception:
-                pass
         raise RuntimeError(
             f"could not publish table schema at {self.dir} after 5 attempts"
         )
@@ -416,10 +283,9 @@ class WriterLease:
     protocol (Hudi's lock provider / Delta's log-store mutual exclusion,
     over this repo's own commit-CAS primitive).
 
-    The lease is a monotone timeline of epoch commits under
-    ``{table}__writer/`` (``e{seq:012d}`` dirs carrying an ``owner`` file,
-    published via fsutil.publish_commit). The NEWEST epoch's owner is the
-    table's one legitimate writer:
+    The lease is a monotone ``fsutil.CommitTimeline`` of epoch commits
+    under ``{table}__writer/`` (``e{seq:012d}`` dirs carrying an ``owner``
+    file). The NEWEST epoch's owner is the table's one legitimate writer:
 
     - ``ensure()`` before a data commit: newest epoch is mine → proceed
       (one listing; owner reads are memoized — epochs are immutable). No
@@ -447,23 +313,13 @@ class WriterLease:
     def __init__(self, spark: SparkSession, table_path: str, writer_id: str | None) -> None:
         self.spark = spark
         self.dir = f"{table_path}__writer"
-        self.stage_root = f"{table_path}__writer_stage"
+        self._timeline = CommitTimeline(
+            spark, self.dir, "e{seq:012d}", f"{table_path}__writer_stage"
+        )
         self.writer_id = writer_id or _default_writer_id()
 
     def _fs(self):
-        from .fsutil import hadoop_fs
-
-        return hadoop_fs(self.spark, self.dir)
-
-    def _epochs(self, fs, hpath) -> list[tuple[int, str | None]]:
-        from .fsutil import list_commits
-
-        out = []
-        for name, content in list_commits(fs, hpath, self.spark, self.dir):
-            if name.startswith("e") and name[1:].isdigit():
-                out.append((int(name[1:]), content))
-        out.sort()
-        return out
+        return self._timeline.fs, self._timeline.hpath
 
     def _owner(self, fs, hpath, uri: str | None) -> str | None:
         """Owner id recorded in one epoch commit; None while in-flight
@@ -488,22 +344,6 @@ class WriterLease:
             _LEASE_OWNER_CACHE.pop(next(iter(_LEASE_OWNER_CACHE)))
         _LEASE_OWNER_CACHE[uri] = owner
         return owner
-
-    def _claim(self, fs, hpath, seq: int) -> bool:
-        import uuid as _uuid
-
-        from .fsutil import publish_commit, write_small_file
-
-        stage = f"{self.stage_root}/{_uuid.uuid4().hex}"
-        fs.mkdirs(hpath(stage))
-        write_small_file(fs, hpath, f"{stage}/owner", self.writer_id.encode())
-        if publish_commit(fs, hpath, stage, f"{self.dir}/e{seq:012d}"):
-            return True
-        try:
-            fs.delete(hpath(stage), True)
-        except Exception:
-            pass
-        return False
 
     def _touch_heartbeat(self, fs, hpath) -> None:
         """Owner liveness signal: overwrite ``{dir}/heartbeat`` (content =
@@ -583,8 +423,9 @@ class WriterLease:
         STALE owner, so a live owner is never displaced. The fenced
         writer's own next ensure()/check() still raises — same fencing
         residual as a manual takeover."""
-        from .fsutil import delete_commit
+        from .fsutil import write_small_file
 
+        tl = self._timeline
         fs, hpath = self._fs()
         if take_over_if_stale is not None:
             floor = 2 * _heartbeat_interval()
@@ -604,12 +445,12 @@ class WriterLease:
         # up (persistent FS trouble).
         stalled, last_seq = 0, -2
         while stalled < 5:
-            epochs = self._epochs(fs, hpath)
+            epochs = tl.entries()
             top_seq = epochs[-1][0] if epochs else -1
             stalled = 0 if top_seq > last_seq else stalled + 1
             last_seq = top_seq
             if epochs:
-                seq, uri = epochs[-1]
+                seq, _, uri = epochs[-1]
                 owner = self._owner(fs, hpath, uri)
                 if owner == self.writer_id:
                     self._touch_heartbeat(fs, hpath)
@@ -648,15 +489,15 @@ class WriterLease:
 
                     _time.sleep(0.05)
                     continue
-                next_seq = seq + 1
-            else:
-                next_seq = 0
-            if self._claim(fs, hpath, next_seq):
+            with tl.stage() as stage:
+                fs.mkdirs(hpath(stage))
+                write_small_file(fs, hpath, f"{stage}/owner", self.writer_id.encode())
+                won = tl.publish(stage, tl.next_seq(epochs))
+            if won:
                 # Retention: keep the new epoch + its predecessor (an
                 # in-flight check against the old epoch resolves, then
                 # fails loudly on the newer one at its next ensure).
-                for s, uri in epochs[:-1]:
-                    delete_commit(fs, hpath, self.dir, f"e{s:012d}", uri)
+                tl.trim(epochs, {top_seq})
                 self._touch_heartbeat(fs, hpath)
                 return
             # Lost the claim race — re-list and re-evaluate ownership.
@@ -673,10 +514,10 @@ class WriterLease:
         writer's commit was in flight, so the fenced writer's pipeline
         dies loudly instead of continuing to publish over the new owner."""
         fs, hpath = self._fs()
-        epochs = self._epochs(fs, hpath)
+        epochs = self._timeline.entries()
         if not epochs:
             return
-        owner = self._owner(fs, hpath, epochs[-1][1])
+        owner = self._owner(fs, hpath, epochs[-1][2])
         if owner is not None and owner != self.writer_id:
             raise ConcurrentWriterError(
                 f"writer {self.writer_id!r} was fenced during a commit to "
@@ -737,7 +578,6 @@ class KeyedTable:
         partition_by: Sequence[str] = (),
         op_col: str | None = "op",
         keep_history: int = 0,
-        merge_schema: bool = False,
         writer_id: str | None = None,
         take_over: bool = False,
         take_over_if_stale: float | None = None,
@@ -759,17 +599,10 @@ class KeyedTable:
         #: fence an owner with no heartbeat for this many seconds — see
         #: WriterLease.ensure. None = manual-takeover-only (the default).
         self.take_over_if_stale = take_over_if_stale
-        #: Legacy fallback knob, superseded by the schema SIDECAR: every
-        #: init/upsert now persists the table's authoritative schema
-        #: (``SchemaSidecar``) and ``read()`` applies it as the explicit
-        #: parquet schema, so a PARTITIONED table that gained columns
-        #: through reconciliation (B11) reads correctly with no knob — the
-        #: old failure was footer-inference picking ONE arbitrary old
-        #: footer and the drifted column vanishing (then being dropped
-        #: permanently by the next partition rewrite). ``merge_schema``
-        #: still governs PRE-SIDECAR tables (written before this existed):
-        #: merge footers instead of inferring from one.
-        self.merge_schema = merge_schema
+        #: The table's authoritative schema: every init/upsert persists it
+        #: and ``read()`` applies it as the explicit parquet schema, so a
+        #: PARTITIONED table that gained columns through reconciliation
+        #: (B11) never loses them to footer inference.
         self.schema_sidecar = SchemaSidecar(spark, path)
         #: Hudi-timeline analogue (opt-in): with ``keep_history`` > 0 every
         #: init/upsert ALSO publishes an immutable full-snapshot commit
@@ -777,6 +610,9 @@ class KeyedTable:
         #: file-version retention Hudi pays too), and ``read(as_of=n)``
         #: time-travels to commit n. 0 = current behavior, no extra writes.
         self.keep_history = max(0, keep_history)
+        self._snapshots = CommitTimeline(
+            spark, f"{path}__snapshots", "s{seq:012d}", f"{path}__stage"
+        )
 
     def _ensure_lease(self) -> None:
         """Assert single-writer ownership, CONSUMING any takeover on the
@@ -833,16 +669,11 @@ class KeyedTable:
         # a reader of a crashed writer's table must see the rolled-forward
         # (or rolled-back) state, never a missing dir.
         recover_table_swap(self.spark, self.path)
-        reader = self.spark.read
         if as_of is None:
             persisted = self.schema_sidecar.current()
             if persisted is not None:
-                return reader.schema(persisted).parquet(self.path)
-            if self.merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            return reader.parquet(self.path)
-        if self.merge_schema:
-            reader = reader.option("mergeSchema", "true")
+                return self.spark.read.schema(persisted).parquet(self.path)
+            return self.spark.read.parquet(self.path)
         for seq, uri in self.snapshots():
             if seq == as_of:
                 persisted = _embedded_commit_schema(self.spark, uri)
@@ -854,29 +685,12 @@ class KeyedTable:
                     # reads. Pre-embed commits fall through to footer
                     # inference, the historical behavior.
                     return self.spark.read.schema(persisted).parquet(uri)
-                return reader.parquet(uri)
+                return self.spark.read.parquet(uri)
         raise FileNotFoundError(
             f"no snapshot commit {as_of} at {self.path}__snapshots "
             f"(have {[s for s, _ in self.snapshots()]}; retention keeps "
             f"the last {self.keep_history})"
         )
-
-    def _snapshot_commits(self) -> list[tuple[int, str | None]]:
-        """(seq, content_uri) for every CLAIMED snapshot name, oldest
-        first — content is None for an in-flight/burned pointer commit
-        (see fsutil.pointer_commit), which publishers must count for seq
-        allocation and readers must skip."""
-        from .fsutil import hadoop_fs, list_commits
-
-        fs, hpath = hadoop_fs(self.spark, self.path)
-        out = []
-        for name, content in list_commits(
-            fs, hpath, self.spark, f"{self.path}__snapshots"
-        ):
-            if name.startswith("s") and name[1:].isdigit():
-                out.append((int(name[1:]), content))
-        out.sort()
-        return out
 
     def snapshots(self) -> list[tuple[int, str]]:
         """Available (commit_seq, uri) snapshots, oldest first. Snapshot
@@ -884,14 +698,13 @@ class KeyedTable:
         garbage from a torn rename_commit undo — healed here (one member
         listing per retained snapshot; keep_history bounds the count)
         before a time-travel read trips on conflicting structures."""
-        from .fsutil import hadoop_fs, heal_nested_dirs
+        from .fsutil import heal_nested_dirs
 
-        fs, hpath = hadoop_fs(self.spark, self.path)
+        tl = self._snapshots
         out = []
-        for seq, uri in self._snapshot_commits():
-            if uri is not None:
-                heal_nested_dirs(fs, hpath, uri)
-                out.append((seq, uri))
+        for seq, _, uri in tl.resolved(tl.entries()):
+            heal_nested_dirs(tl.fs, tl.hpath, uri)
+            out.append((seq, uri))
         return out
 
     def _publish_snapshot(self, df: DataFrame) -> None:
@@ -959,40 +772,23 @@ class KeyedTable:
     def _publish_snapshot_commit(self, populate, schema) -> None:
         """The snapshot commit engine: stage (via ``populate``), embed the
         schema-as-of, CAS-publish into the timeline, trim retention."""
-        import uuid as _uuid
-
-        from .fsutil import delete_commit, hadoop_fs, publish_commit
-
-        fs, hpath = hadoop_fs(self.spark, self.path)
-        stage = f"{self.path}__stage/{_uuid.uuid4().hex}"
-        populate(stage)
-        # Schema-as-of rides INSIDE the commit (after the populate —
-        # overwrite staging clears the dir): read(as_of=n) serves commit n
-        # with commit n's own schema, not the current sidecar's.
-        _embed_commit_schema(self.spark, stage, schema)
-        fs.mkdirs(hpath(f"{self.path}__snapshots"))
-        # Allocation counts BURNED pointer names too (content=None) — a
-        # crash between claim and fill wastes a seq forever; reallocating
-        # it would fail the CAS on every retry.
-        existing = self._snapshot_commits()
+        tl = self._snapshots
         for _attempt in range(5):
-            seq = existing[-1][0] + 1 if existing else 0
-            if publish_commit(
-                fs, hpath, stage, f"{self.path}__snapshots/s{seq:012d}"
-            ):
-                break
-            # A concurrent writer took this seq (or the rename failed
-            # transiently): re-stage if the attempt consumed the stage
-            # (move-INTO undo), re-list, and retry with a fresh number
-            # rather than silently losing the commit.
-            if not fs.exists(hpath(stage)):
+            existing = tl.entries()
+            with tl.stage() as stage:
                 populate(stage)
+                # Schema-as-of rides INSIDE the commit (after the populate
+                # — overwrite staging clears the dir): read(as_of=n) serves
+                # commit n with commit n's own schema, not the sidecar's.
                 _embed_commit_schema(self.spark, stage, schema)
-            existing = self._snapshot_commits()
+                won = tl.publish(stage, tl.next_seq(existing))
+            if won:
+                break
+            # A concurrent writer took this seq: re-stage, re-list, retry
+            # with a fresh number rather than silently losing the commit.
         else:
-            fs.delete(hpath(stage), True)
             raise RuntimeError(
-                f"could not publish snapshot commit at {self.path}__snapshots "
+                f"could not publish snapshot commit at {tl.dir} "
                 "after 5 rename attempts"
             )
         # Retention windows over RESOLVED (readable) snapshots only — a
@@ -1003,23 +799,13 @@ class KeyedTable:
         # unconditionally, as compact() does for base versions; their seq
         # then frees for reallocation, which is safe — a burned claim was
         # never readable, so no as_of reader ever bound to it.
-        resolved = [(s, uri) for s, uri in existing if uri is not None]
-        keep = (
-            {s for s, _ in resolved[-(self.keep_history - 1):]}
+        resolved = tl.resolved(existing)
+        tl.trim(
+            existing,
+            {s for s, _, _ in resolved[-(self.keep_history - 1):]}
             if self.keep_history > 1
-            else set()
+            else (),
         )
-        for s, uri in existing:
-            if s in keep:
-                continue
-            delete_commit(fs, hpath, f"{self.path}__snapshots", f"s{s:012d}", uri)
-        # The staged dir was renamed away; drop its (now empty) parent.
-        # Non-recursive delete refuses a non-empty dir, so a concurrent
-        # writer's in-flight stage is never touched.
-        try:
-            fs.delete(hpath(f"{self.path}__stage"), False)
-        except Exception:
-            pass
 
     def register(self, name: str) -> None:
         """Catalog sync (B12). Locally a temp view; on a cluster this is
@@ -1378,7 +1164,6 @@ class DeltaLogTable:
         auto_compact_deltas: int | None = None,
         compact_target_files: int | None = None,
         async_compact: bool = False,
-        merge_schema: bool = False,
         writer_id: str | None = None,
         take_over: bool = False,
         take_over_if_stale: float | None = None,
@@ -1401,26 +1186,19 @@ class DeltaLogTable:
         self.auto_compact_deltas = auto_compact_deltas
         self.compact_target_files = compact_target_files
         self.async_compact = async_compact
-        #: Read the DELTA LOG with parquet schema merging — required when
-        #: change batches can gain columns (B11 schema drift): the delta
-        #: dir holds one directory per batch, each with its own footer
-        #: schema, and WITHOUT merging Spark infers the union read's
-        #: schema from ONE arbitrary footer, so a drifted column
-        #: nondeterministically VANISHES from the merge-on-read view (and
-        #: from the next compaction's folded base — permanent loss). The
-        #: COW sibling (KeyedTable.merge_schema) has the same knob for
-        #: the same reason; both default off because the footer-read cost
-        #: is per file and stable-schema feeds shouldn't pay it. The base
-        #: snapshot never needs merging (each version is written by one
-        #: job with one schema); base ∪ delta reconciliation is handled
-        #: by merge_upsert's unionByName.
-        #:
-        #: Like the COW sibling, this knob is now the PRE-SIDECAR fallback:
-        #: ``append_changes`` persists the delta log's authoritative schema
-        #: (union of every appended batch's schema) and delta reads apply
-        #: it explicitly, so drifted columns survive with the knob off.
-        self.merge_schema = merge_schema
+        #: The delta log's authoritative schema: ``append_changes``
+        #: persists the union of every appended batch's schema and delta
+        #: reads apply it explicitly — each batch dir has its own footer
+        #: schema, and footer inference picks ONE, so a drifted column
+        #: would vanish from the merge-on-read view (and from the next
+        #: compaction's folded base). Base versions need no sidecar: each
+        #: is written by one job with one schema, embedded in the commit.
         self.delta_schema_sidecar = SchemaSidecar(spark, f"{path}/delta")
+        #: Compaction versions ``v{seq}_t{compacted_through + 1}``.
+        self._base_timeline = CommitTimeline(
+            spark, f"{path}/base__commits", "v{seq:012d}_t{tag:012d}",
+            f"{path}/__stage",
+        )
 
     def _ensure_lease(self) -> None:
         """Single-writer assert with one-shot takeover consumption — same
@@ -1428,67 +1206,28 @@ class DeltaLogTable:
         self._lease.ensure(self.take_over, self.take_over_if_stale)
         self.take_over = False
 
-    def _base(self) -> str:
-        # Legacy (pre-MVCC) single-dir base layout; still readable.
-        return f"{self.path}/base"
-
-    def _base_commits_dir(self) -> str:
-        return f"{self.path}/base__commits"
-
     def _delta(self) -> str:
         return f"{self.path}/delta"
 
-    def _base_commits(self) -> list[tuple[int, int, str | None]]:
-        """Every CLAIMED base-version name as (seq, compacted_through,
-        content_uri), seq-ascending; content is None for an in-flight or
-        burned pointer commit (fsutil.pointer_commit) — such a version was
-        never published (its deltas were never retired), so readers skip it
-        and only seq ALLOCATION counts it. One directory listing plus one
-        small-file read per pointer."""
-        import re as _re
-
-        from .fsutil import list_commits
-
-        fs, hpath = self._fs()
-        out = []
-        for name, content in list_commits(
-            fs, hpath, self.spark, self._base_commits_dir()
-        ):
-            m = _re.match(r"^v(\d{12})_t(\d{12})$", name)
-            if m:
-                out.append((int(m.group(1)), int(m.group(2)) - 1, content))
-        out.sort()
-        return out
-
     def _base_versions(self) -> list[tuple[int, int, str]]:
         """Published (readable) base versions as (seq, compacted_through,
-        uri), seq-ascending."""
-        return [
-            (seq, through, uri)
-            for seq, through, uri in self._base_commits()
-            if uri is not None
-        ]
+        uri), seq-ascending — one listing. Burned or in-flight pointer
+        names are skipped: such a version was never published (its deltas
+        were never retired); only seq allocation counts them."""
+        tl = self._base_timeline
+        return [(s, t - 1, uri) for s, t, uri in tl.resolved(tl.entries())]
 
     def _latest_base(self) -> tuple[int, int, str] | None:
-        """Newest base version, falling back to the legacy ``base/`` dir
-        (treated as version -1 compacted through every batch id below the
-        smallest live delta — i.e. deltas on disk all apply)."""
+        """Newest published base version, or None before the first
+        compaction."""
         versions = self._base_versions()
-        if versions:
-            return versions[-1]
-        fs, hpath = self._fs()
-        try:
-            if fs.exists(hpath(self._base())):
-                return (-1, -1, self._base())
-        except Exception:
-            pass
-        return None
+        return versions[-1] if versions else None
 
     def _delta_read_schema(self) -> T.StructType | None:
         """Explicit read schema for the delta log: the persisted sidecar
         union plus the ``ingest_batch`` partition column (resolved from
         the directory names). None when no sidecar exists (pre-sidecar
-        table) — callers fall back to footer inference/merging."""
+        table) — callers fall back to footer inference."""
         cur = self.delta_schema_sidecar.current()
         if cur is None:
             return None
@@ -1501,7 +1240,6 @@ class DeltaLogTable:
         self,
         p: str,
         strict: bool = False,
-        merge: bool = False,
         schema: T.StructType | None = None,
     ) -> DataFrame | None:
         """``strict`` distinguishes MISSING (→ None) from BROKEN (→ raise):
@@ -1511,13 +1249,10 @@ class DeltaLogTable:
         ``ingest_batch > through`` filter would mask those committed rows
         forever (the same missing-vs-broken probe the COW upsert uses).
         ``schema``: explicit read schema (the sidecar path — authoritative,
-        stable under drift). ``merge``: parquet schema merging, the
-        pre-sidecar fallback for delta-log reads under ``merge_schema``."""
+        stable under drift)."""
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        elif merge:
-            reader = reader.option("mergeSchema", "true")
         if strict:
             fs, hpath = self._fs()
             if not fs.exists(hpath(p)):
@@ -1770,10 +1505,7 @@ class DeltaLogTable:
                 )
             return base
         deltas = self._read_dir(
-            self._delta(),
-            strict=_strict,
-            merge=self.merge_schema,
-            schema=self._delta_read_schema(),
+            self._delta(), strict=_strict, schema=self._delta_read_schema()
         )
         if deltas is not None and through >= 0:
             # A version records the batch id it compacted THROUGH; delta
@@ -1819,11 +1551,7 @@ class DeltaLogTable:
         bounded by compaction cadence — compaction retires delta dirs, so
         consumers must keep ``since_batch`` within the uncompacted window
         (exactly Hudi's incremental-read-vs-cleaner contract)."""
-        deltas = self._read_dir(
-            self._delta(),
-            merge=self.merge_schema,
-            schema=self._delta_read_schema(),
-        )
+        deltas = self._read_dir(self._delta(), schema=self._delta_read_schema())
         if deltas is None:
             raise FileNotFoundError(
                 f"no delta log at {self.path} (compacted or empty table)"
@@ -1881,9 +1609,7 @@ class DeltaLogTable:
 
     def _compact_once(self) -> None:
         """One compaction attempt — see ``compact`` for the contract."""
-        import uuid as _uuid
-
-        from .fsutil import publish_commit
+        from .fsutil import heal_nested_dirs
 
         # The fail-safe story below leans on strict scans RAISING when a
         # racing (out-of-process) compaction retires a file between this
@@ -1903,6 +1629,7 @@ class DeltaLogTable:
                 "instead of failing and retrying"
             )
 
+        tl = self._base_timeline
         fs, hpath = self._fs()
         # committed_only: under the async service this listing races the
         # ingest thread's in-flight parquet job — see delta_batches.
@@ -1916,16 +1643,12 @@ class DeltaLogTable:
         # fsutil.heal_nested_dirs). Done here, not in _base_versions: reads
         # are hot and pin a one-listing contract; compaction is rare and
         # already walking the timeline.
-        from .fsutil import heal_nested_dirs
-
         for _, _, uri in versions:
             heal_nested_dirs(fs, hpath, uri)
         if versions and through <= versions[-1][1]:
             return  # every live delta dir is already folded — nothing to do
-        # Allocate past every CLAIMED name, burned pointers included — a
-        # crash between pointer claim and fill wastes that seq forever.
-        commits = self._base_commits()
-        seq = commits[-1][0] + 1 if commits else 0
+        # The freshest listing: allocation and retention both key off it.
+        commits = tl.entries()
         # read() applies exactly the deltas newer than the current base
         # version, UPPER-BOUNDED at the listing this compaction records as
         # compacted-through — a batch appended while the merge runs stays
@@ -1945,28 +1668,18 @@ class DeltaLogTable:
         merged = self.read(_upper_batch=through, _strict=True)
         if self.compact_target_files:
             merged = merged.coalesce(self.compact_target_files)
-        stage = f"{self.path}/__stage/{_uuid.uuid4().hex}"
-        try:
+        # A failed stage write is a full-table snapshot of garbage: the
+        # stage context deletes it, or a deterministically-failing ASYNC
+        # service would leak one per trigger, forever.
+        with tl.stage() as stage:
             merged.write.mode("overwrite").parquet(stage)
             # Schema-as-of rides inside the version commit (read_version
             # applies it; see _embedded_commit_schema).
             _embed_commit_schema(self.spark, stage, merged.schema)
-            fs.mkdirs(hpath(self._base_commits_dir()))
-            target = f"{self._base_commits_dir()}/v{seq:012d}_t{through + 1:012d}"
-            published = publish_commit(fs, hpath, stage, target)
-        except BaseException:
-            # A failed stage write is a full-table snapshot of garbage —
-            # without this cleanup a deterministically-failing ASYNC
-            # service would leak one per trigger, forever.
-            try:
-                fs.delete(hpath(stage), True)
-            except Exception:
-                pass
-            raise
+            published = tl.publish(stage, tl.next_seq(commits), through + 1)
         if not published:
             # Lost the race to a concurrent compaction; its snapshot folds
-            # the same (or more) deltas. Drop ours and do not retire.
-            fs.delete(hpath(stage), True)
+            # the same (or more) deltas. Ours is dropped; do not retire.
             return
         prev_through = versions[-1][1] if versions else -1
         # Retire from the RAW listing: any dir ≤ prev_through was folded
@@ -1981,30 +1694,13 @@ class DeltaLogTable:
             except Exception:
                 pass
         # Retention: keep the two newest versions (in-flight readers of the
-        # previous one finish on immutable files) + drop the legacy dir.
-        # Walk the CLAIMED list so burned pointer names get GC'd too; the
-        # previous newest RESOLVED version is the one retained.
-        from .fsutil import delete_commit
-
-        # keep_uri from the COMMITS listing (the freshest one we hold), not
-        # the earlier `versions` listing: a concurrent compaction's version
-        # published between the two listings is in `commits` but not in
-        # `versions` — keying retention off the stale list would delete it
-        # moments after it was published, failing an in-flight reader that
-        # just resolved it (violating the keep-two-newest rule).
-        resolved_commits = [u for _, _, u in commits if u is not None]
-        keep_uri = resolved_commits[-1] if resolved_commits else None
-        for s, t, uri in commits:
-            if uri is not None and uri == keep_uri:
-                continue
-            delete_commit(
-                fs,
-                hpath,
-                self._base_commits_dir(),
-                f"v{s:012d}_t{t + 1:012d}",
-                uri,
-            )
-        try:
-            fs.delete(hpath(self._base()), True)
-        except Exception:
-            pass
+        # previous one finish on immutable files). Walk the CLAIMED list so
+        # burned pointer names get GC'd too; the previous newest RESOLVED
+        # version is the one retained — taken from the COMMITS listing (the
+        # freshest one we hold), not the earlier `versions` listing: a
+        # concurrent compaction's version published between the two
+        # listings is in `commits` but not in `versions`, and keying
+        # retention off the stale list would delete it moments after it
+        # was published, failing an in-flight reader that just resolved it.
+        resolved = tl.resolved(commits)
+        tl.trim(commits, {resolved[-1][0]} if resolved else ())

@@ -146,6 +146,47 @@ def test_sidecar_burned_newest_does_not_narrow(spark, tmp_path, monkeypatch):
     assert {f.name for f in cur.fields} == {"a", "b"}
 
 
+@pytest.mark.parametrize("protocol", ["rename", "pointer"])
+def test_sidecar_stale_publisher_cannot_reuse_trimmed_seq(
+    spark, tmp_path, monkeypatch, protocol
+):
+    """A publisher whose listing is three publishes old targets a seq that
+    retention has already deleted below the newest version, so the name
+    is free again. The timeline's pre-CAS recheck must turn that into a
+    lost CAS (re-union on the newest, publish on top) — not a 'won'
+    version below the newest that no reader ever sees, which silently
+    drops the stale publisher's column."""
+    from pyspark.sql import types as T
+
+    from debezium_emr_hudi_deltastreamer_sample_spark.table import SchemaSidecar
+
+    monkeypatch.setenv("SPARK_GRAFT_COMMIT_PROTOCOL", protocol)
+    path = str(tmp_path / "t")
+
+    def cols(*names):
+        return T.StructType([T.StructField(n, T.IntegerType()) for n in names])
+
+    stale, other = SchemaSidecar(spark, path), SchemaSidecar(spark, path)
+    stale.publish(cols("id"))  # v0
+    real_newest = stale._newest
+    raced = []
+
+    def newest_after_three_publishes(entries):
+        # Between the stale publisher's listing and its CAS, v1..v3 land
+        # and retention deletes v0 and v1.
+        if not raced:
+            raced.append(True)
+            for c in ("x", "y", "z"):
+                other.publish(cols("id", c))
+        return real_newest(entries)
+
+    stale._newest = newest_after_three_publishes
+    stale.publish(cols("id", "mine"))
+    assert set(SchemaSidecar(spark, path).current().names) == {
+        "id", "x", "y", "z", "mine"
+    }
+
+
 def test_keyed_table_time_travel_with_burned_snapshot_name(spark, tmp_path, monkeypatch):
     """A burned snapshot pointer: reads skip it, the next publish allocates
     past it, and time travel over the real commits still works."""

@@ -104,7 +104,7 @@ def test_lease_threaded_takeover_storm(spark, tmp_path):
     assert not errors, errors[:5]
     probe = lease_of("probe")
     fs, hpath = probe._fs()
-    epochs = probe._epochs(fs, hpath)
+    epochs = [(s, u) for s, _, u in probe._timeline.entries()]
     assert epochs, "no epoch ever published"
     seqs = [s for s, _ in epochs]
     assert seqs == sorted(set(seqs)), "duplicate/unsorted epoch seqs"
@@ -136,7 +136,7 @@ def test_lease_same_writer_many_threads_single_epoch(spark, tmp_path):
     assert not errors, errors[:5]
     probe = WriterLease(spark, str(tmp_path / "t"), "probe")
     fs, hpath = probe._fs()
-    epochs = probe._epochs(fs, hpath)
+    epochs = [(s, u) for s, _, u in probe._timeline.entries()]
     assert [s for s, _ in epochs] == [0]
     assert probe._owner(fs, hpath, epochs[0][1]) == "pipe"
 

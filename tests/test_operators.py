@@ -1438,6 +1438,24 @@ def test_bloom_decontaminate_no_false_negatives(spark, sf_tiny):
     assert bloom_params(1000, 0.01)[0] >= 9000  # ~9.6 bits/elem at 1%
 
 
+def test_bloom_build_guard_caps_the_collect(spark):
+    """max_items is a guard rail checked on a collect capped at
+    max_items + 1 rows: 100 distinct grams over max_items=10 raise, and
+    max_items=100 over the same grams builds a filter with no false
+    negatives."""
+    from debezium_emr_hudi_deltastreamer_sample_spark.operators.bloom import (
+        bloom_contains,
+        build_bloom,
+    )
+
+    grams = spark.createDataFrame([(f"g{i}",) for i in range(100)], "ng string")
+    with pytest.raises(ValueError, match="more than max_items=10 "):
+        build_bloom(grams, "ng", max_items=10)
+    words, m, k = build_bloom(grams, "ng", max_items=100)
+    missed = grams.filter(~bloom_contains(words, m, k, F.col("ng"))).count()
+    assert missed == 0
+
+
 def test_python_datasource_partitions_and_pushdown(spark):
     """Spark 4 Python Data Source: partition planning yields one task per
     planned range, pushFilters consumes the op-equality filter (source

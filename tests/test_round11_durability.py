@@ -269,7 +269,7 @@ def test_rollup_burned_claim_waited_out_once_then_skipped(
     fs, hpath = r._hadoop()
     fs.createNewFile(hpath(f"{r._commits_dir()}/c000000000001.commit"))  # burned
     r.apply_batch(_events(spark, [(ts, "k1", 2.0)]), batch_id=1)
-    assert 1 in r._burned_seqs
+    assert 1 in r._timeline.burned
     # Allocation skipped the burned name: c2 is the new tip.
     names = sorted(
         n for n, u in list_commits(fs, hpath, spark, r._commits_dir()) if u

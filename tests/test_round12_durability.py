@@ -116,7 +116,7 @@ def test_rollup_survives_filler_stalled_past_old_budget(
     filler.start()
     r.apply_batch(_events(spark, [(ts, "k1", 2.0)]), batch_id=1)
     filler.join()
-    assert 1 not in r._burned_seqs
+    assert 1 not in r._timeline.burned
     got = {(row.k, row.total) for row in r.read().select("k", "total").collect()}
     # k2 (the stalled filler's commit) survived into the successor chain.
     assert got == {("k1", 3.0), ("k2", 5.0)}
@@ -155,9 +155,9 @@ def test_rollup_unburns_late_resolved_seq(spark, tmp_path, monkeypatch):
     fs.createNewFile(hpath(f"{other_stage}/_applied_b000000000000_other"))
     with open(f"{r._commits_dir()}/c000000000001.commit", "wb") as fh:
         fh.write(other_stage.encode())
-    r._burned_seqs.add(1)
+    r._timeline.burned.add(1)
     r.apply_batch(_events(spark, [(ts, "k1", 2.0)]), batch_id=1)
-    assert 1 not in r._burned_seqs
+    assert 1 not in r._timeline.burned
     got = {(row.k, row.total) for row in r.read().select("k", "total").collect()}
     assert got == {("k1", 3.0), ("k2", 7.0)}
 
@@ -177,7 +177,7 @@ def test_rollup_truly_burned_claim_still_skipped_and_remembered(
     fs, hpath = r._hadoop()
     fs.createNewFile(hpath(f"{r._commits_dir()}/c000000000001.commit"))
     r.apply_batch(_events(spark, [(ts, "k1", 2.0)]), batch_id=1)
-    assert 1 in r._burned_seqs
+    assert 1 in r._timeline.burned
     t0 = time.perf_counter()
     r.apply_batch(_events(spark, [(ts, "k1", 4.0)]), batch_id=2)
     # Remembered: no second stall wait (generous bound; the wait was 0.3s).
@@ -265,7 +265,7 @@ def test_sidecar_retention_keeps_newest_resolved_predecessor(
             [T.StructField("a", T.IntegerType()), T.StructField("b", T.StringType())]
         )
     )  # v2
-    versions = dict(side._versions(fs, hpath))
+    versions = {s: u for s, _, u in side._timeline.entries()}
     assert 2 in versions and versions[2] is not None
     assert 0 in versions and versions[0] is not None  # resolved predecessor kept
     assert not fs.exists(hpath(burned))  # burned name GC'd

@@ -1387,9 +1387,9 @@ def test_rollup_seq_only_cas_and_legacy_names(spark, tmp_path):
     """Round-6 review fix for the rollup commit CAS: commit names are
     seq-only (two writers at the same seq MUST collide on the name,
     whatever batch/run they carry) with (batch, run) provenance as a
-    marker file inside the commit; pre-fix full-token names still parse
-    (in-place upgrade). A same-seq squatter forces the retry path and no
-    batch is lost."""
+    marker file inside the commit. A same-seq squatter forces the retry
+    path and no batch is lost. (The pre-fix full-token names are no longer
+    parsed: the commit log reads one name shape.)"""
     from pyspark.sql import functions as F
 
     from debezium_emr_hudi_deltastreamer_sample_spark.streaming.rollup import (
@@ -1429,14 +1429,6 @@ def test_rollup_seq_only_cas_and_legacy_names(spark, tmp_path):
     assert got == {"a": (2, 3.0), "b": (1, 5.0)}
     assert max(s for s, _, _, _, _ in roll._commits()) == 2
     fs.delete(hpath(squat), True)
-
-    # Legacy full-token name parses alongside (upgrade path).
-    legacy = f"{roll._commits_dir()}/c000000000050_b000000000007_oldrun"
-    fs.mkdirs(hpath(legacy))
-    seqs = {(s, b, r) for s, b, r, _, _ in roll._commits()}
-    assert (50, 7, "oldrun") in seqs
-    assert roll.last_applied_batch("oldrun") == 7
-    fs.delete(hpath(legacy), True)
 
     # Reserved partials-schema names are refused at the boundary.
     import pytest

@@ -169,6 +169,29 @@ def test_swap_refuses_externally_recreated_target(spark, tmp_path):
     assert not os.path.exists(f"{path}/abc123")
 
 
+def test_concurrent_heal_mid_swap_finishes_without_nesting(spark, tmp_path):
+    """The journal is present for the whole of a healthy swap, so an
+    unleased reader's recover_table_swap can run inside one. Run between
+    the retire and the publish, the heal rolls the swap forward itself;
+    the writer must then count its publish as done — not roll the retired
+    copy back onto the new table dir, where LocalFileSystem would nest it
+    (duplicated rows)."""
+    path = str(tmp_path / "t")
+    spark.range(2).selectExpr("id", "'old' v").write.parquet(path)
+    stage = f"{path}__stage/abc123"
+    spark.range(5).selectExpr("id", "'new' v").write.parquet(stage)
+
+    swap_table_dir(
+        spark, path, stage,
+        _test_after_retire=lambda: recover_table_swap(spark, path),
+    )
+    rows = sorted((r.id, r.v) for r in spark.read.parquet(path).collect())
+    assert rows == [(i, "new") for i in range(5)]
+    assert not [d for d in os.listdir(path) if os.path.isdir(f"{path}/{d}")]
+    assert not os.path.exists(stage)
+    assert not os.path.exists(table_swap_journal(path))
+
+
 def test_linked_snapshots_survive_rewrites_and_retention(spark, tmp_path):
     """keep_history snapshots are hard links to the table's immutable
     files: later upserts retire/unlink the table dir, compaction rewrites

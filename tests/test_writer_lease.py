@@ -49,7 +49,7 @@ def test_same_writer_id_many_instances_share_the_lease(spark, tmp_path):
     assert {r.id for r in t.read().collect()} == {0, 1, 2}
     # One epoch claimed, ever: no churn on the stable hot path.
     fs, hpath = t._lease._fs()
-    assert len(t._lease._epochs(fs, hpath)) == 1
+    assert len(t._lease._timeline.entries()) == 1
 
 
 def test_take_over_fences_the_old_writer(spark, tmp_path):
@@ -176,4 +176,4 @@ def test_burned_epoch_claim_raises_then_take_over_recovers(
     w2.upsert(_mk(spark, [(2, "b", "c", 2)]))
     assert {r.id for r in w2.read().collect()} == {1, 2}
     fs, hpath = w2._lease._fs()
-    assert [s for s, _ in w2._lease._epochs(fs, hpath)][-1] == 2
+    assert [s for s, _, _ in w2._lease._timeline.entries()][-1] == 2
